@@ -50,6 +50,14 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
         # Read parquet timestamps as written (driver data is µs/ns naive).
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
+        # Stateful streaming runs on RocksDB: transformWithStateInPandas
+        # (the edge trigger) needs its column families, and large state
+        # lives off-heap instead of in the default in-memory map.
+        .config(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        )
         .config("spark.ui.enabled", "false")
     )
     if "SPARK_GRAFT_DRIVER_MEMORY" in os.environ:

@@ -15,12 +15,14 @@ Streaming query, in two flavors:
     ``trigger(processingTime='5 minutes')`` — batch boundaries define the
     window exactly as MainApp.java:26,38.
 
-The edge-trigger dedup is a keyed stateful operator
-(``applyInPandasWithState``) with per-NIC state {last_alert: bool} —
-globally consistent and checkpointed, deliberately fixing the
-reference's per-executor-JVM static map (KafkaProducer.java:15, see
-SURVEY.md §4.3: the reference re-sends on executor reassignment and
-loses state on restart; we do not replicate the bug).
+Both flavors share ONE edge-trigger state machine,
+:class:`EdgeTriggerProcessor` (``transformWithStateInPandas`` on the
+RocksDB state store ``session.get_spark`` configures), with per-NIC
+state {last_alert: bool} — globally consistent and checkpointed,
+deliberately fixing the reference's per-executor-JVM static map
+(KafkaProducer.java:15, see SURVEY.md §4.3: the reference re-sends on
+executor reassignment and loses state on restart; we do not replicate
+the bug).
 
 Scale: state is one boolean per NIC key — O(distinct keys) cluster-wide,
 partitioned by key hash; the windowed agg before it is the only shuffle.
@@ -37,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from ..operators.traffic import ALERT_MSG, INFO_MSG
 
@@ -90,24 +93,41 @@ def windowed_totals_stream(
     )
 
 
-def _edge_trigger_fn(max_limit: float) -> Callable[..., Iterator[pd.DataFrame]]:
-    """Build the applyInPandasWithState function for the O13 state machine.
+class EdgeTriggerProcessor(StatefulProcessor):
+    """The O13 edge-trigger state machine (KafkaProducer.java:34-41).
 
     Truth table (KafkaProducer.java:35-40): state absent -> emit;
     is_alert != stored flag -> emit; else suppress. State updates on
-    every observation. Input rows are per-key batch totals."""
+    every observation. Input rows are per-key contributions; their sum
+    is the key's micro-batch total.
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    State: one ValueState ``last_alert {flag: bool}`` per NIC key —
+    O(distinct keys) cluster-wide, hash-partitioned, checkpointed (the
+    reference's static per-JVM map was neither, SURVEY.md §4.3).
+    """
+
+    def __init__(self, max_limit: float, ttl_ms: int | None = None) -> None:
+        self._max_limit = max_limit
+        self._ttl_ms = ttl_ms
+
+    def init(self, handle) -> None:
+        # Optional TTL: a NIC silent for ttl_ms gets its state evicted
+        # (and re-alerts on reappearance, like a fresh key). At 100 TB
+        # key cardinalities the TTL is what bounds the state store;
+        # requires timeMode="processingtime" on the query.
+        self._state = handle.getValueState(
+            "last_alert", "flag boolean", ttlDurationMs=self._ttl_ms
+        )
+
+    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
         (nif,) = key
         total = 0.0
-        for pdf in pdfs:
+        for pdf in rows:
             total += float(pdf["total_bytes"].sum())
-        is_alert = total > max_limit
-        prev = state.get if state.exists else None
-        state.update((bool(is_alert),))
-        if prev is None or prev[0] != is_alert:
+        is_alert = total > self._max_limit
+        prev = self._state.get()
+        self._state.update((bool(is_alert),))
+        if prev is None or bool(prev[0]) != is_alert:
             yield pd.DataFrame(
                 {
                     "nif": [nif],
@@ -117,90 +137,19 @@ def _edge_trigger_fn(max_limit: float) -> Callable[..., Iterator[pd.DataFrame]]:
                 }
             )
 
-    return fn
-
-
-def edge_trigger_stream(
-    totals: DataFrame, max_limit: float
-) -> DataFrame:
-    """Edge-triggered alert dedup over per-key totals.
-
-    ``totals`` must be an UN-aggregated stream of per-key contributions
-    (e.g. the raw packet stream projected to (nif, total_bytes) per
-    micro-batch): Structured Streaming allows one stateful operator per
-    query, so the per-batch sum happens inside the state function —
-    mirroring the reference, where reduceByKey ran per micro-batch
-    before the stateful producer (MainApp.java:54-63)."""
-    return totals.groupBy("nif").applyInPandasWithState(
-        _edge_trigger_fn(max_limit),
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=T.StructType([T.StructField("last_alert", T.BooleanType())]),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class EdgeTriggerProcessor:
-    """Spark-4 ``StatefulProcessor`` form of the O13 edge-trigger state
-    machine (KafkaProducer.java:34-41) — the idiomatic successor to
-    ``applyInPandasWithState`` above, with named state variables, TTL
-    support, and state-schema evolution.
-
-    State: one ValueState ``last_alert {flag: bool}`` per NIC key —
-    O(distinct keys) cluster-wide, hash-partitioned, checkpointed (the
-    reference's static per-JVM map was neither, SURVEY.md §4.3).
-
-    Defined lazily as a factory because ``StatefulProcessor`` subclasses
-    import pyspark.sql.streaming.stateful_processor, which exists only on
-    Spark 4.
-    """
-
-    def __new__(cls, max_limit: float, ttl_ms: int | None = None):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class _Processor(StatefulProcessor):
-            def init(self, handle) -> None:
-                # Optional TTL: a NIC silent for ttl_ms gets its state
-                # evicted (and re-alerts on reappearance, like a fresh
-                # key). At 100 TB key cardinalities the TTL is what
-                # bounds the state store; requires
-                # timeMode="processingtime" on the query.
-                self._state = handle.getValueState(
-                    "last_alert", "flag boolean", ttlDurationMs=ttl_ms
-                )
-
-            def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-                (nif,) = key
-                total = 0.0
-                for pdf in rows:
-                    total += float(pdf["total_bytes"].sum())
-                is_alert = total > max_limit
-                prev = self._state.get()
-                self._state.update((bool(is_alert),))
-                if prev is None or bool(prev[0]) != is_alert:
-                    yield pd.DataFrame(
-                        {
-                            "nif": [nif],
-                            "total_bytes": [total],
-                            "is_alert": [is_alert],
-                            "message": [ALERT_MSG if is_alert else INFO_MSG],
-                        }
-                    )
-
-            def close(self) -> None:
-                pass
-
-        return _Processor()
-
 
 def edge_trigger_stream_tws(
     totals: DataFrame, max_limit: float, ttl_ms: int | None = None
 ) -> DataFrame:
-    """Edge-triggered alert dedup via ``transformWithStateInPandas``
-    (Spark 4). Same truth table as :func:`edge_trigger_stream`; prefer
-    this on Spark 4 — ``applyInPandasWithState`` remains as the Spark-3.x
-    fallback. ``ttl_ms`` bounds the state store by evicting keys idle
-    longer than the TTL (state TTL needs processing-time mode)."""
+    """Edge-triggered alert dedup via ``transformWithStateInPandas``.
+
+    ``totals`` must be an UN-aggregated stream of per-key contributions
+    (e.g. the raw packet stream projected to (nif, total_bytes) per
+    micro-batch): the per-batch sum happens inside the processor —
+    mirroring the reference, where reduceByKey ran per micro-batch
+    before the stateful producer (MainApp.java:54-63). ``ttl_ms`` bounds
+    the state store by evicting keys idle longer than the TTL (state TTL
+    needs processing-time mode)."""
     return totals.groupBy("nif").transformWithStateInPandas(
         statefulProcessor=EdgeTriggerProcessor(max_limit, ttl_ms),
         outputStructType=ALERT_SCHEMA,
@@ -220,41 +169,25 @@ def reference_pipeline_foreach_batch(
     aggregate bytes per NIC, apply the threshold, run the edge-trigger
     state machine, and hand emitted alerts to ``sink``.
 
-    The state dict lives on the driver — unlike the reference's
-    per-executor static map (KafkaProducer.java:15) it is globally
-    consistent across batches. The batch aggregate itself runs
-    distributed (groupBy inside foreachBatch); only the per-key flags
-    and emitted rows touch the driver — O(distinct NICs), tiny.
+    The state machine is :func:`edge_trigger_stream_tws`, so the per-NIC
+    flags live in the checkpointed state store: a restart on the same
+    ``checkpoint`` resumes them instead of re-sending every NIC's alert.
+    Only the emitted rows reach the driver — O(flag flips), tiny.
 
     Returns the started StreamingQuery.
     """
-    last_alert: dict[str, bool] = {}
+    alerts = edge_trigger_stream_tws(
+        packets.select("nif", F.col("bytes").alias("total_bytes")), max_limit
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch_df.groupBy("nif")
-            .agg(F.sum("bytes").alias("total_bytes"))
-            .collect()
-        )
-        out: list[dict] = []
-        for r in rows:
-            is_alert = r["total_bytes"] > max_limit
-            prev = last_alert.get(r["nif"])
-            last_alert[r["nif"]] = is_alert
-            if prev is None or prev != is_alert:
-                out.append(
-                    {
-                        "nif": r["nif"],
-                        "total_bytes": r["total_bytes"],
-                        "is_alert": is_alert,
-                        "message": ALERT_MSG if is_alert else INFO_MSG,
-                        "batch_id": batch_id,
-                    }
-                )
+        out = [
+            {**r.asDict(), "batch_id": batch_id} for r in batch_df.collect()
+        ]
         if out:
             sink(out)
 
-    writer = packets.writeStream.foreachBatch(process).outputMode("update")
+    writer = alerts.writeStream.foreachBatch(process).outputMode("append")
     if trigger:
         writer = writer.trigger(processingTime=trigger)
     if checkpoint:
@@ -516,47 +449,33 @@ EWMA_SCHEMA = T.StructType(
 )
 
 
-class EwmaProcessor:
+class EwmaProcessor(StatefulProcessor):
     """Streaming EWMA (alpha = 1/2) per key — the live twin of the batch
-    ``ts_ewma_smooth`` operator, as a Spark-4 ``StatefulProcessor``.
+    ``ts_ewma_smooth`` operator.
 
     State per key is O(1): the running smoothed value and an
     observation count. Each micro-batch folds its rows in (ts, value)
     order through ``s -> (s + x) / 2`` — the same IEEE-exact halving as
     the batch form, so a given arrival order reproduces bitwise across
     restarts (the ValueState checkpoint carries the fold seed).
-
-    Factory-shaped like :class:`EdgeTriggerProcessor` because the
-    ``StatefulProcessor`` base class only exists on Spark 4.
     """
 
-    def __new__(cls):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+    def init(self, handle) -> None:
+        self._state = handle.getValueState("ewma", "s double, n bigint")
 
-        class _Processor(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._state = handle.getValueState(
-                    "ewma", "s double, n bigint"
-                )
-
-            def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-                (nif,) = key
-                pdf = pd.concat(list(rows))
-                pdf = pdf.sort_values(["ts", "total_bytes"])
-                prev = self._state.get()
-                s = None if prev is None else float(prev[0])
-                n = 0 if prev is None else int(prev[1])
-                for x in pdf["total_bytes"]:
-                    x = float(x)
-                    s = x if s is None else (s + x) / 2.0
-                    n += 1
-                self._state.update((float(s), int(n)))
-                yield pd.DataFrame({"nif": [nif], "n": [n], "ewma": [s]})
-
-            def close(self) -> None:
-                pass
-
-        return _Processor()
+    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
+        (nif,) = key
+        pdf = pd.concat(list(rows))
+        pdf = pdf.sort_values(["ts", "total_bytes"])
+        prev = self._state.get()
+        s = None if prev is None else float(prev[0])
+        n = 0 if prev is None else int(prev[1])
+        for x in pdf["total_bytes"]:
+            x = float(x)
+            s = x if s is None else (s + x) / 2.0
+            n += 1
+        self._state.update((float(s), int(n)))
+        yield pd.DataFrame({"nif": [nif], "n": [n], "ewma": [s]})
 
 
 def ewma_stream_tws(values: DataFrame) -> DataFrame:
@@ -570,45 +489,6 @@ def ewma_stream_tws(values: DataFrame) -> DataFrame:
         outputStructType=EWMA_SCHEMA,
         outputMode="append",
         timeMode="none",
-    )
-
-
-def _ewma_fold_fn() -> Callable[..., Iterator[pd.DataFrame]]:
-    """applyInPandasWithState fold for :func:`ewma_stream` — identical
-    recurrence to :class:`EwmaProcessor`, Spark-3.x-compatible API."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (nif,) = key
-        pdf = pd.concat(list(pdfs))
-        pdf = pdf.sort_values(["ts", "total_bytes"])
-        s, n = (state.get if state.exists else (None, 0))
-        for x in pdf["total_bytes"]:
-            x = float(x)
-            s = x if s is None else (s + x) / 2.0
-            n += 1
-        state.update((float(s), int(n)))
-        yield pd.DataFrame({"nif": [nif], "n": [n], "ewma": [s]})
-
-    return fn
-
-
-def ewma_stream(values: DataFrame) -> DataFrame:
-    """Per-key streaming EWMA via ``applyInPandasWithState`` — the
-    Spark-3.x twin of :func:`ewma_stream_tws` (same O(1) state, same
-    exact-halving fold; see :class:`EwmaProcessor` for semantics)."""
-    return values.groupBy("nif").applyInPandasWithState(
-        _ewma_fold_fn(),
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=T.StructType(
-            [
-                T.StructField("s", T.DoubleType()),
-                T.StructField("n", T.LongType()),
-            ]
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -659,43 +539,36 @@ RATE_SCHEMA = (
 )
 
 
-class RateLimitProcessor:
-    """Per-key token-bucket rate limiter as a Spark-4
-    ``StatefulProcessor``: ValueState holds (current_window, used)
-    per user; a row in a new hour window resets the budget, rows
-    beyond ``k`` inside one window are flagged throttled. The batch
-    twin (``batch_oracle.stream_rate_limit``) is the same verdict via
-    ROW_NUMBER on bounded input. Factory-shaped like
-    :class:`EdgeTriggerProcessor` (Spark-4-only import)."""
+class RateLimitProcessor(StatefulProcessor):
+    """Per-key token-bucket rate limiter: ValueState holds
+    (current_window, used) per user; a row in a new hour window resets
+    the budget, rows beyond ``k`` inside one window are flagged
+    throttled. The batch twin (``batch_oracle.stream_rate_limit``) is
+    the same verdict via ROW_NUMBER on bounded input."""
 
-    def __new__(cls, k: int):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+    def __init__(self, k: int) -> None:
+        self._k = k
 
-        class _Processor(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._state = handle.getValueState(
-                    "bucket", "win timestamp, used int"
-                )
+    def init(self, handle) -> None:
+        self._state = handle.getValueState("bucket", "win timestamp, used int")
 
-            def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-                (user_id,) = key
-                pdf = pd.concat(list(rows)).sort_values("ts")
-                st = self._state.get()
-                win, used = (st[0], int(st[1])) if st is not None else (None, 0)
-                out = []
-                for ts in pdf["ts"]:
-                    w = ts.floor("h")
-                    if win is None or w != win:
-                        win, used = w, 0
-                    allowed = used < k
-                    used += 1
-                    out.append((user_id, ts, w, allowed))
-                self._state.update((win, used))
-                yield pd.DataFrame(
-                    out, columns=["user_id", "ts", "window_start", "allowed"]
-                )
-
-        return _Processor()
+    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
+        (user_id,) = key
+        pdf = pd.concat(list(rows)).sort_values("ts")
+        st = self._state.get()
+        win, used = (st[0], int(st[1])) if st is not None else (None, 0)
+        out = []
+        for ts in pdf["ts"]:
+            w = ts.floor("h")
+            if win is None or w != win:
+                win, used = w, 0
+            allowed = used < self._k
+            used += 1
+            out.append((user_id, ts, w, allowed))
+        self._state.update((win, used))
+        yield pd.DataFrame(
+            out, columns=["user_id", "ts", "window_start", "allowed"]
+        )
 
 
 def rate_limit_stream_tws(events: DataFrame, k: int) -> DataFrame:

@@ -24,7 +24,7 @@ from spark_streaming_test_spark.sources.kafka_wire import (
 from spark_streaming_test_spark.streaming.pipeline import (
     ALERT_MSG,
     INFO_MSG,
-    edge_trigger_stream,
+    edge_trigger_stream_tws,
     packet_stream_from_dir,
     read_kafka_wire_topic,
     write_alerts_kafka_wire,
@@ -174,7 +174,7 @@ def test_kafka_wire_live_edge_trigger_delivery(spark, tmp_path):
     totals = packet_stream_from_dir(spark, src).select(
         "nif", F.col("bytes").alias("total_bytes")
     )
-    alerts = edge_trigger_stream(totals, max_limit=150.0)
+    alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
     with MiniKafkaBroker() as broker:
         q = write_alerts_kafka_wire(
             alerts,
@@ -207,7 +207,7 @@ def test_kafka_wire_delivery_survives_retriable_nack(spark, tmp_path):
     totals = packet_stream_from_dir(spark, src).select(
         "nif", F.col("bytes").alias("total_bytes")
     )
-    alerts = edge_trigger_stream(totals, max_limit=150.0)
+    alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
     with MiniKafkaBroker(fail_first=1) as broker:
         q = write_alerts_kafka_wire(
             alerts,
@@ -375,7 +375,7 @@ def test_kafka_wire_produce_consume_loop_through_spark(spark, tmp_path):
     totals = packet_stream_from_dir(spark, src).select(
         "nif", F.col("bytes").alias("total_bytes")
     )
-    alerts = edge_trigger_stream(totals, max_limit=150.0)
+    alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
     with MiniKafkaBroker() as broker:
         q = write_alerts_kafka_wire(
             alerts, broker.host, broker.port,
@@ -1027,7 +1027,7 @@ def test_kafka_wire_sink_negotiated_compressed_delivery(spark, tmp_path):
     totals = packet_stream_from_dir(spark, src).select(
         "nif", F.col("bytes").alias("total_bytes")
     )
-    alerts = edge_trigger_stream(totals, max_limit=150.0)
+    alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
     with MiniKafkaBroker() as broker:
         q = write_alerts_kafka_wire(
             alerts, broker.host, broker.port,
@@ -1160,7 +1160,7 @@ def test_kafka_wire_sink_negotiated_zstd_delivery(spark, tmp_path):
     totals = packet_stream_from_dir(spark, src).select(
         "nif", F.col("bytes").alias("total_bytes")
     )
-    alerts = edge_trigger_stream(totals, max_limit=150.0)
+    alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
     with MiniKafkaBroker() as broker:
         q = write_alerts_kafka_wire(
             alerts, broker.host, broker.port,

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -18,7 +17,7 @@ from spark_streaming_test_spark.streaming.pipeline import (
     ALERT_MSG,
     INFO_MSG,
     PACKET_SCHEMA,
-    edge_trigger_stream,
+    edge_trigger_stream_tws,
     packet_stream_from_dir,
     reference_pipeline_foreach_batch,
     windowed_totals_stream,
@@ -52,13 +51,15 @@ def _ts(minute: int):
 
 
 def test_edge_trigger_truth_table(spark, tmp_path):
-    """Per-key totals over 4 batches; emissions only on flag flips.
+    """The same 4-batch truth table end to end through the foreachBatch
+    parity path: the sink receives exactly the flag flips, in batch
+    order, each tagged with the micro-batch that emitted it.
 
     Key A totals: 200(alert,emit) 220(alert,SUPPRESS) 80(info,emit) 90(info,SUPPRESS)
-    Key B totals: 100(info,emit) 400(alert,emit) ...
+    Key B totals: 100(info,emit) 400(alert,emit) 500(alert,SUPPRESS) 90(info,emit)
     """
     src = str(tmp_path / "in")
-    out = str(tmp_path / "chk")
+    chk = str(tmp_path / "chk")
     batches = [
         [("A", 200.0, _ts(0)), ("B", 100.0, _ts(0))],
         [("A", 120.0, _ts(5)), ("A", 100.0, _ts(5)), ("B", 400.0, _ts(5))],
@@ -66,92 +67,41 @@ def test_edge_trigger_truth_table(spark, tmp_path):
         [("A", 90.0, _ts(15)), ("B", 90.0, _ts(15))],
     ]
     _write_packet_batch(spark, src, batches[0], 0)
-    packets = packet_stream_from_dir(spark, src)
-    totals = packets.select("nif", F.col("bytes").alias("total_bytes"))
-    alerts = edge_trigger_stream(totals, max_limit=150.0)
-    q = (
-        alerts.writeStream.format("memory")
-        .queryName("edge_out")
-        .outputMode("append")
-        .option("checkpointLocation", out)
-        .start()
+    collected: list[dict] = []
+    q = reference_pipeline_foreach_batch(
+        packet_stream_from_dir(spark, src),
+        max_limit=150.0,
+        sink=lambda rows: collected.extend(rows),
+        checkpoint=chk,
     )
     try:
         q.processAllAvailable()
         for i, rows in enumerate(batches[1:], start=1):
             _write_packet_batch(spark, src, rows, i)
             q.processAllAvailable()
-        got = [
-            (r["nif"], r["total_bytes"], r["is_alert"], r["message"])
-            for r in spark.sql(
-                "SELECT * FROM edge_out ORDER BY nif, total_bytes"
-            ).collect()
-        ]
     finally:
         q.stop()
+    got = sorted(
+        (r["batch_id"], r["nif"], r["total_bytes"], r["is_alert"], r["message"])
+        for r in collected
+    )
     assert got == [
-        ("A", 80.0, False, INFO_MSG),     # batch2: alert->info EMIT
-        ("A", 200.0, True, ALERT_MSG),    # batch0: first obs EMIT
-        # A batch1 (220, alert) suppressed; A batch3 (90, info) suppressed
-        ("B", 90.0, False, INFO_MSG),     # batch3: alert->info EMIT
-        ("B", 100.0, False, INFO_MSG),    # batch0: first obs EMIT
-        ("B", 400.0, True, ALERT_MSG),    # batch1: info->alert EMIT
-        # B batch2 (500, alert) suppressed
+        (0, "A", 200.0, True, ALERT_MSG),    # first obs EMIT
+        (0, "B", 100.0, False, INFO_MSG),    # first obs EMIT
+        (1, "B", 400.0, True, ALERT_MSG),    # info->alert EMIT
+        (2, "A", 80.0, False, INFO_MSG),     # alert->info EMIT
+        (3, "B", 90.0, False, INFO_MSG),     # alert->info EMIT
     ]
 
 
-def _has_protobuf() -> bool:
-    # transformWithStateInPandas needs a working google.protobuf in both
-    # the driver and the python workers. The vendored mini-runtime
-    # (spark_streaming_test_spark/vendor/protoshim) supplies it when the
-    # real wheel is absent; conftest activates it before the JVM starts
-    # so PYTHONPATH reaches the workers. Gate only on genuine failure.
-    from spark_streaming_test_spark.protoshim import ensure_protobuf
+def test_edge_trigger_truth_table_tws(spark, tmp_path):
+    """Per-key totals over 4 batches through EdgeTriggerProcessor
+    (transformWithStateInPandas) into a memory sink; emissions only on
+    flag flips.
 
-    return ensure_protobuf()
-
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextmanager
-def _rocksdb_state_store(spark):
-    """transformWithStateInPandas requires a state store with column
-    families — RocksDB (rocksdbjni ships in the pyspark distribution),
-    not the default HDFSBackedStateStoreProvider. Scoped set/restore so
-    the session-wide fixture keeps its default for every other test."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-
-
-@pytest.fixture
-def tws_rocksdb(spark):
-    """Hold the RocksDB provider for the duration of a TWS test (the
-    provider class is resolved from session conf when the streaming
-    query plans its state stores)."""
-    with _rocksdb_state_store(spark):
-        yield
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this env)",
-)
-def test_edge_trigger_truth_table_tws(spark, tmp_path, tws_rocksdb):
-    """Same truth table through the Spark-4 transformWithStateInPandas
-    path (EdgeTriggerProcessor) — both stateful APIs must agree."""
-    from spark_streaming_test_spark.streaming.pipeline import edge_trigger_stream_tws
-
+    Key A totals: 200(alert,emit) 220(alert,SUPPRESS) 80(info,emit) 90(info,SUPPRESS)
+    Key B totals: 100(info,emit) 400(alert,emit) ...
+    """
     src = str(tmp_path / "in")
     out = str(tmp_path / "chk")
     batches = [
@@ -185,17 +135,19 @@ def test_edge_trigger_truth_table_tws(spark, tmp_path, tws_rocksdb):
     finally:
         q.stop()
     assert got == [
-        ("A", 80.0, False, INFO_MSG),
-        ("A", 200.0, True, ALERT_MSG),
-        ("B", 90.0, False, INFO_MSG),
-        ("B", 100.0, False, INFO_MSG),
-        ("B", 400.0, True, ALERT_MSG),
+        ("A", 80.0, False, INFO_MSG),     # batch2: alert->info EMIT
+        ("A", 200.0, True, ALERT_MSG),    # batch0: first obs EMIT
+        # A batch1 (220, alert) suppressed; A batch3 (90, info) suppressed
+        ("B", 90.0, False, INFO_MSG),     # batch3: alert->info EMIT
+        ("B", 100.0, False, INFO_MSG),    # batch0: first obs EMIT
+        ("B", 400.0, True, ALERT_MSG),    # batch1: info->alert EMIT
+        # B batch2 (500, alert) suppressed
     ]
 
 
 def test_foreach_batch_reference_parity(spark, tmp_path):
     """The processing-time parity path (O9-O15): same truth table via
-    foreachBatch + driver-consistent state."""
+    foreachBatch over the checkpointed edge-trigger state."""
     src = str(tmp_path / "in")
     chk = str(tmp_path / "chk")
     batches = [
@@ -222,6 +174,40 @@ def test_foreach_batch_reference_parity(spark, tmp_path):
         ("A", True, ALERT_MSG),   # first observation
         ("A", False, INFO_MSG),   # 220 suppressed, then flip to info
     ]
+
+
+def test_foreach_batch_reference_state_survives_restart(spark, tmp_path):
+    """The foreachBatch parity path keeps its edge-trigger flags in the
+    checkpoint: after a stop/start on the same checkpoint, A staying
+    over-limit (200 -> 220) must NOT re-send the Alert — the reference's
+    restart bug (SURVEY.md §4.3) that a driver-held dict reproduces."""
+    src = str(tmp_path / "in")
+    chk = str(tmp_path / "chk")
+    collected: list[dict] = []
+
+    def run_available():
+        q = reference_pipeline_foreach_batch(
+            packet_stream_from_dir(spark, src),
+            max_limit=150.0,
+            sink=lambda rows: collected.extend(rows),
+            checkpoint=chk,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _write_packet_batch(spark, src, [("A", 200.0, _ts(0))], 0)
+    run_available()
+    _write_packet_batch(spark, src, [("A", 220.0, _ts(5))], 1)
+    run_available()
+    # the restarted query did consume batch 1 ...
+    assert os.path.exists(os.path.join(chk, "commits", "1"))
+    # ... and only the first observation's Alert ever reached the sink
+    assert [
+        (r["nif"], r["total_bytes"], r["is_alert"], r["message"], r["batch_id"])
+        for r in collected
+    ] == [("A", 200.0, True, ALERT_MSG, 0)], collected
 
 
 def test_streaming_window_equals_batch(spark, sf_dir, tmp_path):
@@ -447,7 +433,7 @@ def test_edge_trigger_state_survives_restart(spark, tmp_path):
     def start_query():
         packets = packet_stream_from_dir(spark, src)
         totals = packets.select("nif", F.col("bytes").alias("total_bytes"))
-        alerts = edge_trigger_stream(totals, max_limit=150.0)
+        alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
 
         def sink(batch_df, batch_id):
             batch_df.write.mode("append").parquet(out)
@@ -781,19 +767,10 @@ def test_idempotent_sink_replay_safe(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == total
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this env)",
-)
-def test_edge_trigger_tws_with_ttl_wiring(spark, tmp_path, tws_rocksdb):
+def test_edge_trigger_tws_with_ttl_wiring(spark, tmp_path):
     """TTL-enabled state: same edge-trigger truth table on a single
     batch (TTL far in the future), proving the ttlDurationMs +
     processing-time-mode wiring end-to-end."""
-    from spark_streaming_test_spark.streaming.pipeline import (
-        PACKET_SCHEMA,
-        edge_trigger_stream_tws,
-    )
-
     src = str(tmp_path / "packets")
     rows = [
         ("eth0", 200.0, "2024-01-01 00:00:30"),
@@ -1072,22 +1049,12 @@ def test_streaming_query_listener_reports_progress(spark, tmp_path):
     assert seen["rows"] > 0, "listener saw zero input rows"
 
 
-@pytest.mark.parametrize("api", ["apply", "tws"])
-def test_streaming_ewma_matches_batch_fold(spark, tmp_path, api, tws_rocksdb):
+def test_streaming_ewma_matches_batch_fold(spark, tmp_path):
     """Three micro-batches of per-key values; the final streaming EWMA
     must equal a plain Python left fold s -> (s+x)/2 over the full
     arrival-ordered sequence — state carries the fold seed across
-    batches, and the exact-halving recurrence leaves no float slack.
-    Both stateful APIs run the same recurrence; the Spark-4
-    transformWithState form is env-gated on protobuf."""
-    from spark_streaming_test_spark.streaming.pipeline import (
-        ewma_stream,
-        ewma_stream_tws,
-    )
-
-    if api == "tws" and not _has_protobuf():
-        pytest.skip("transformWithStateInPandas needs google.protobuf")
-    ewma_op = ewma_stream_tws if api == "tws" else ewma_stream
+    batches, and the exact-halving recurrence leaves no float slack."""
+    from spark_streaming_test_spark.streaming.pipeline import ewma_stream_tws
 
     src = str(tmp_path / "in")
     chk = str(tmp_path / "chk")
@@ -1102,9 +1069,9 @@ def test_streaming_ewma_matches_batch_fold(spark, tmp_path, api, tws_rocksdb):
         "nif", F.col("bytes").alias("total_bytes"), "ts"
     )
     q = (
-        ewma_op(values)
+        ewma_stream_tws(values)
         .writeStream.format("memory")
-        .queryName(f"ewma_out_{api}")
+        .queryName("ewma_out")
         .outputMode("append")
         .option("checkpointLocation", chk)
         .start()
@@ -1115,7 +1082,7 @@ def test_streaming_ewma_matches_batch_fold(spark, tmp_path, api, tws_rocksdb):
             _write_packet_batch(spark, src, rows, i)
             q.processAllAvailable()
         rows = spark.sql(
-            f"SELECT nif, n, ewma FROM ewma_out_{api}"
+            "SELECT nif, n, ewma FROM ewma_out"
         ).collect()
     finally:
         q.stop()
@@ -1148,7 +1115,7 @@ def test_streaming_ewma_state_survives_restart(spark, tmp_path):
     over the FULL sequence, not a fresh fold over the second batch."""
     import glob as _glob
 
-    from spark_streaming_test_spark.streaming.pipeline import ewma_stream
+    from spark_streaming_test_spark.streaming.pipeline import ewma_stream_tws
 
     src = str(tmp_path / "in")
     chk = str(tmp_path / "chk")
@@ -1164,7 +1131,7 @@ def test_streaming_ewma_state_survives_restart(spark, tmp_path):
             batch_df.write.mode("append").parquet(out)
 
         return (
-            ewma_stream(values)
+            ewma_stream_tws(values)
             .writeStream.foreachBatch(sink)
             .outputMode("append")
             .option("checkpointLocation", chk)
@@ -1410,11 +1377,7 @@ def test_stream_stream_outer_join_emits_unmatched(spark, tmp_path):
     assert sum(1 for c, p in got if c == 2) == 1
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this env)",
-)
-def test_rate_limit_stream_tws(spark, tmp_path, tws_rocksdb):
+def test_rate_limit_stream_tws(spark, tmp_path):
     """Live per-(user, hour) rate limiter through transformWithState:
     first K events of a window pass, later ones are throttled, a new
     window resets the budget — and the state survives across
@@ -1979,7 +1942,6 @@ def test_reference_pipeline_composed_end_to_end(spark, tmp_path):
     from spark_streaming_test_spark.streaming.pipeline import (
         ALERT_MSG,
         INFO_MSG,
-        edge_trigger_stream,
         packet_stream_from_dir,
     )
 
@@ -2001,7 +1963,7 @@ def test_reference_pipeline_composed_end_to_end(spark, tmp_path):
         packets = packet_stream_from_dir(spark, src)
         totals = packets.select("nif", F.col("bytes").alias("total_bytes"))
         q = (
-            edge_trigger_stream(totals, limit)
+            edge_trigger_stream_tws(totals, limit)
             .writeStream.format("jsonl_dir")
             .option("path", out)
             .option("checkpointLocation", chk)
@@ -2114,16 +2076,12 @@ def test_streaming_query_listener_and_observed_metrics(spark, tmp_path):
 
 def test_windowed_agg_on_rocksdb_state_store(spark, tmp_path):
     """Production state-store path: the SAME windowed aggregation runs
-    on the RocksDB state store provider (the large-state backend —
-    state lives off-heap/on-disk instead of the default in-memory
-    HDFS-backed map) and produces identical results, surviving a
-    restart from its checkpoint."""
+    on the session's RocksDB state store provider (the large-state
+    backend — state lives off-heap/on-disk instead of Spark's built-in
+    in-memory HDFS-backed map) and produces identical results, surviving
+    a restart from its checkpoint."""
     from pyspark.sql import functions as F
 
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     src = str(tmp_path / "src")
     out_tbl = "rocksdb_windows"
     rows = [
@@ -2135,53 +2093,41 @@ def test_windowed_agg_on_rocksdb_state_store(spark, tmp_path):
         .select(F.timestamp_seconds(F.col("sec") * 60).alias("ts"), "user", "v")
         .write.parquet(src)
     )
-    saved = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    q = (
+        spark.readStream.schema("ts timestamp, user string, v double")
+        .parquet(src)
+        .groupBy(F.window("ts", "1 hour"), "user")
+        .agg(F.sum("v").alias("total"))
+        .select(
+            F.unix_timestamp("window.start").alias("w"), "user", "total"
+        )
+        .writeStream.format("memory")
+        .queryName(out_tbl)
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    try:
-        q = (
-            spark.readStream.schema("ts timestamp, user string, v double")
-            .parquet(src)
-            .groupBy(F.window("ts", "1 hour"), "user")
-            .agg(F.sum("v").alias("total"))
-            .select(
-                F.unix_timestamp("window.start").alias("w"), "user", "total"
-            )
-            .writeStream.format("memory")
-            .queryName(out_tbl)
-            .outputMode("complete")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = {
-            (r["w"], r["user"]): r["total"]
-            for r in spark.sql(f"SELECT * FROM {out_tbl}").collect()
-        }
-        # verify the provider actually engaged (checkpoint holds RocksDB
-        # SST/zip artifacts, not the default provider's .delta files)
-        import glob
+    q.awaitTermination(180)
+    got = {
+        (r["w"], r["user"]): r["total"]
+        for r in spark.sql(f"SELECT * FROM {out_tbl}").collect()
+    }
+    # verify the provider actually engaged (checkpoint holds RocksDB
+    # SST/zip artifacts, not the HDFS-backed provider's .delta files)
+    import glob
 
-        state_files = glob.glob(
-            str(tmp_path / "ckpt" / "state" / "**" / "*"), recursive=True
-        )
-        assert any(".zip" in f or ".sst" in f for f in state_files), (
-            state_files[:10]
-        )
-        want = {}
-        for sec, user, v in rows:
-            w = (sec * 60) // 3600 * 3600
-            want[(w, user)] = want.get((w, user), 0.0) + v
-        assert got == want
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", saved
-            )
+    state_files = glob.glob(
+        str(tmp_path / "ckpt" / "state" / "**" / "*"), recursive=True
+    )
+    assert any(".zip" in f or ".sst" in f for f in state_files), (
+        state_files[:10]
+    )
+    want = {}
+    for sec, user, v in rows:
+        w = (sec * 60) // 3600 * 3600
+        want[(w, user)] = want.get((w, user), 0.0) + v
+    assert got == want
 
 
 def test_rocksdb_changelog_checkpointing_restart(spark, tmp_path):
@@ -2197,21 +2143,14 @@ def test_rocksdb_changelog_checkpointing_restart(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass": provider,
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
+    changelog = (
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    )
+    saved = spark.conf.get(changelog, None)
+    spark.conf.set(changelog, "true")
 
     def run_once():
         q = (
@@ -2246,11 +2185,10 @@ def test_rocksdb_changelog_checkpointing_restart(spark, tmp_path):
             state_files[:10],
         )
     finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        if saved is None:
+            spark.conf.unset(changelog)
+        else:
+            spark.conf.set(changelog, saved)
 
 
 def test_streaming_incremental_substring_index(spark, tmp_path):

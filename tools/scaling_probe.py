@@ -41,16 +41,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPLICAS = 10
 SRC = "/root/testdata/sf0.1"
 
-# Per-table integer key columns to offset per replica (disjoint copies).
+# Per-table integer key columns to offset per replica (disjoint copies),
+# each tagged with its key DOMAIN. Every column of a domain shifts by the
+# same per-replica span, so FK/PK pairs (o_custkey -> c_custkey,
+# l_partkey -> p_partkey, events.user_id -> c_custkey, ...) still join
+# inside each replica.
 OFFSET_KEYS = {
-    "embeddings": ["vec_id"],
-    "documents": ["doc_id"],
-    "events": ["event_id", "user_id"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
-    "part": ["p_partkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
+    "embeddings": {"vec_id": "vec_id"},
+    "documents": {"doc_id": "doc_id"},
+    "events": {"event_id": "event_id", "user_id": "custkey"},
+    "orders": {"o_orderkey": "orderkey", "o_custkey": "custkey"},
+    "lineitem": {
+        "l_orderkey": "orderkey",
+        "l_partkey": "partkey",
+        "l_suppkey": "suppkey",
+    },
+    "part": {"p_partkey": "partkey"},
+    "customer": {"c_custkey": "custkey"},
+    "supplier": {"s_suppkey": "suppkey"},
 }
 
 # Compute-heavy cohort: the heavy-tail bench cohort plus the heaviest
@@ -77,6 +85,13 @@ def generate(out_dir: str) -> None:
 
     spark = get_spark("scaling-probe-gen")
     os.makedirs(out_dir, exist_ok=True)
+    # One span per key domain: the max over every column in the domain.
+    spans: dict[str, int] = {}
+    for name, keys in OFFSET_KEYS.items():
+        base = load(spark, SRC, name)
+        for k, domain in keys.items():
+            top = int(base.agg(F.max(F.col(k))).collect()[0][0]) + 1
+            spans[domain] = max(spans.get(domain, 0), top)
     for name in TABLES:
         base = load(spark, SRC, name)
         keys = OFFSET_KEYS.get(name)
@@ -86,15 +101,11 @@ def generate(out_dir: str) -> None:
                 os.path.join(out_dir, f"{name}.parquet")
             )
             continue
-        spans = {
-            k: int(base.agg(F.max(F.col(k))).collect()[0][0]) + 1
-            for k in keys
-        }
         parts = []
         for r in range(REPLICAS):
             rep = base
-            for k in keys:
-                rep = rep.withColumn(k, F.col(k) + F.lit(r * spans[k]))
+            for k, domain in keys.items():
+                rep = rep.withColumn(k, F.col(k) + F.lit(r * spans[domain]))
             parts.append(rep)
         out = parts[0]
         for rep in parts[1:]:

@@ -108,9 +108,9 @@ def main() -> None:
     n_hot = 0
     with open(args.out, "a") as out:
         for i, name in enumerate(names):
-            fn = qs[name]
             rec: dict = {"query": name}
             try:
+                fn = qs[name]
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 reset_query_state(spark)
                 t0 = time.time()
